@@ -510,7 +510,7 @@ def main() -> None:
                 materialize(QUERIES[name](spark, slice_dir))
                 sf1r_lh[name] = round(time.perf_counter() - t0, 3)
                 rerun_reason = None
-                if sf1r_lh[name] > 2 * LANE_ANCHOR_SEC[name]:
+                if sf1r_lh[name] > 2 * LANE_ANCHOR_SEC.get(name, float("inf")):
                     rerun_reason = "outlier"  # >2× history: re-measure
                 elif name in LAKEHOUSE_WARM_SPLIT:
                     rerun_reason = "warm_split"  # JIT-split instrumentation

@@ -57,7 +57,8 @@ import urllib.parse
 import uuid
 
 from .dv_kernel import dv_blobs_by_file, dv_state_positions
-from .mor_diff import _SCHEME_RE, _parquet_row_count
+from .footer import footer_scope, read_footer
+from .mor_diff import _SCHEME_RE
 from .timetravel import SnapshotTable
 
 PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
@@ -172,12 +173,39 @@ def _snapshot_files(root: str, snapshot_path: str) -> list[dict]:
     return out
 
 
-def _delta_stats(path: str) -> str | None:
+def _snapshot_rows(root: str, files: list[dict]) -> int:
+    """Total footer row count of `_snapshot_files` entries."""
+    return sum(
+        read_footer(os.path.join(root, urllib.parse.unquote(f["path"]))).num_rows
+        for f in files
+    )
+
+
+def _check_compaction_rows(
+    root: str, version: int, prev_dir: str, got: int
+) -> None:
+    """A snapshot flagged as a compaction must hold exactly the previous
+    snapshot's rows: a wrong flag would silently turn a data change into
+    a commit (Delta OPTIMIZE with dataChange=false, Iceberg "replace")
+    that CDF, streaming and external consumers skip."""
+    if not os.path.isdir(prev_dir):
+        return
+    want = _snapshot_rows(root, _snapshot_files(root, prev_dir))
+    if got != want:
+        raise ValueError(
+            f"snapshot v{version} is flagged operation=compaction but "
+            f"changes the row count ({want} -> {got}); a compaction must "
+            "preserve the table's rows"
+        )
+
+
+def _delta_stats(path: str) -> str:
     """Per-file statistics JSON for the `add.stats` field
     (numRecords / minValues / maxValues / nullCount — the shape
     delta-spark writes and reads for DATA SKIPPING), computed from the
-    parquet FOOTER only. At 100 TB these are what let an external Delta
-    engine prune files by predicate instead of scanning the table.
+    parquet FOOTER only (operators/footer.py). At 100 TB these are what
+    let an external Delta engine prune files by predicate instead of
+    scanning the table.
     Values serialize as JSON-native types; timestamps in the
     delta-spark stats format — UTC, millisecond precision, 'Z' suffix
     (yyyy-MM-dd'T'HH:mm:ss.SSS'Z') — so external engines parse and
@@ -186,8 +214,6 @@ def _delta_stats(path: str) -> str | None:
     tightened bound could make an engine skip a file it needs).
     Columns whose footer lacks statistics are simply omitted."""
     import datetime as _dt
-
-    import pyarrow.parquet as pq
 
     def conv(v, round_up=False):
         if isinstance(v, bytes):
@@ -208,54 +234,19 @@ def _delta_stats(path: str) -> str | None:
             return v
         return None
 
-    try:
-        md = pq.ParquetFile(path).metadata
-    except Exception:
-        # Parquet VARIANT footers are rejected by this pyarrow; keep
-        # the numRecords half of the stats through the DuckDB-backed
-        # counter (bounds stay absent — engines then simply cannot
-        # skip these files, which is correct)
-        try:
-            return json.dumps(
-                {
-                    "numRecords": _parquet_row_count(path),
-                    "minValues": {},
-                    "maxValues": {},
-                    "nullCount": {},
-                }
-            )
-        except Exception:
-            return None
-    agg: dict[str, dict] = {}
-    for rg in range(md.num_row_groups):
-        row_group = md.row_group(rg)
-        for ci in range(row_group.num_columns):
-            col = row_group.column(ci)
-            name = col.path_in_schema
-            if "." in name:
-                continue
-            st = col.statistics
-            ent = agg.setdefault(
-                name, {"nulls": 0, "min": None, "max": None, "ok": st is not None}
-            )
-            if st is None or not st.has_min_max or st.null_count is None:
-                ent["ok"] = False
-                continue
-            ent["nulls"] += st.null_count
-            ent["min"] = st.min if ent["min"] is None else min(ent["min"], st.min)
-            ent["max"] = st.max if ent["max"] is None else max(ent["max"], st.max)
+    ft = read_footer(path)
     mins, maxs, nulls = {}, {}, {}
-    for name, ent in agg.items():
-        if not ent["ok"]:
+    for name, c in ft.columns.items():
+        if not c.ok:
             continue
-        nulls[name] = ent["nulls"]
-        lo, hi = conv(ent["min"]), conv(ent["max"], round_up=True)
+        nulls[name] = c.null_count
+        lo, hi = conv(c.min), conv(c.max, round_up=True)
         if lo is not None and hi is not None:
             mins[name] = lo
             maxs[name] = hi
     return json.dumps(
         {
-            "numRecords": md.num_rows,
+            "numRecords": ft.num_rows,
             "minValues": mins,
             "maxValues": maxs,
             "nullCount": nulls,
@@ -329,6 +320,7 @@ def _write_change_data(
     ]
 
 
+@footer_scope()
 def export_delta_log(
     table: SnapshotTable,
     branch: str = "main",
@@ -453,14 +445,9 @@ def export_delta_log(
             and base_live_rows is not None
             and schema_str == prev_schema
         ):
-            from .mor_diff import _parquet_row_count, _position_delete_diff
+            from .mor_diff import _position_delete_diff
 
-            total_rc = sum(
-                _parquet_row_count(
-                    os.path.join(table.root, urllib.parse.unquote(f["path"]))
-                )
-                for f in files
-            )
+            total_rc = _snapshot_rows(table.root, files)
             if total_rc < base_live_rows:
                 prior = (
                     _dv_state_positions(table.spark, dv_state)
@@ -640,36 +627,12 @@ def export_delta_log(
             if is_compaction and i > 0:
                 # OPTIMIZE must be a logical no-op: the rewritten files
                 # must hold exactly the pre-compaction live row count
-                # (= the previous snapshot's rows). A wrong flag would
-                # poison CDF/streaming consumers that skip
-                # dataChange=false commits.
-                from .mor_diff import _parquet_row_count
-
-                prev_dir = by_version[events[i - 1]["version"]]["path"]
-                if os.path.isdir(prev_dir):
-                    want = sum(
-                        _parquet_row_count(
-                            os.path.join(
-                                table.root, urllib.parse.unquote(f["path"])
-                            )
-                        )
-                        for f in _snapshot_files(table.root, prev_dir)
-                    )
-                    got_rc = sum(
-                        _parquet_row_count(
-                            os.path.join(
-                                table.root, urllib.parse.unquote(f["path"])
-                            )
-                        )
-                        for f in files
-                    )
-                    if got_rc != want:
-                        raise ValueError(
-                            f"snapshot v{ev['version']} is flagged "
-                            f"operation=compaction but changes the row "
-                            f"count ({want} -> {got_rc}); OPTIMIZE "
-                            "commits must preserve the table's rows"
-                        )
+                _check_compaction_rows(
+                    table.root,
+                    ev["version"],
+                    by_version[events[i - 1]["version"]]["path"],
+                    _snapshot_rows(table.root, files),
+                )
             current_paths = {f["path"] for f in files}
             for f in prev_files:
                 if f["path"] not in current_paths:
@@ -687,27 +650,16 @@ def export_delta_log(
                 f2 = dict(f)
                 if is_compaction:
                     f2["dataChange"] = False
-                st = _delta_stats(
+                f2["stats"] = _delta_stats(
                     os.path.join(table.root, urllib.parse.unquote(f["path"]))
                 )
-                if st:
-                    f2["stats"] = st
                 stat_files.append(f2)
             actions.extend({"add": f} for f in stat_files)
             prev_files = stat_files
             base_dir = snap["path"]
             dv_state = {}
             if mor_deletes:
-                from .mor_diff import _parquet_row_count
-
-                base_live_rows = sum(
-                    _parquet_row_count(
-                        os.path.join(
-                            table.root, urllib.parse.unquote(f["path"])
-                        )
-                    )
-                    for f in files
-                )
+                base_live_rows = _snapshot_rows(table.root, files)
 
         tmp = os.path.join(log_dir, f".{i:020d}.json.tmp")
         with open(tmp, "w") as fh:

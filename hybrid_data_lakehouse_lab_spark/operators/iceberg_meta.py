@@ -87,15 +87,15 @@ import urllib.parse
 import uuid
 
 from .avro_io import read_avro, write_avro
+from .footer import footer_scope, read_footer
 from .mor_diff import (
     _SCHEME_RE,
     _append_diff,
-    _parquet_row_count,
     _position_delete_diff,
     _upsert_diff,
     finalize_spark_parts,
 )
-from .delta_log import _snapshot_files
+from .delta_log import _check_compaction_rows, _snapshot_files, _snapshot_rows
 from .timetravel import SnapshotTable
 
 _EPOCH = datetime.date(1970, 1, 1)
@@ -422,7 +422,6 @@ def _write_position_deletes(
     delete set fits one task (true for retention/erasure commits); a
     bulk delete raises the partition count — every resulting part file
     simply becomes one more manifest entry."""
-    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     pcols = pcols or []
@@ -578,49 +577,27 @@ def _bound_bytes(iceberg_type: str, v):
 
 
 def _file_column_stats(path: str, col_ids: dict[str, int], type_of: dict[str, str]):
-    """Per-column stats straight from the parquet FOOTER (no data
-    read): returns the four spec maps (value_counts 109,
-    null_value_counts 110, lower_bounds 125, upper_bounds 128) in the
-    array-of-record Avro shape, or Nones where the footer lacks
-    statistics. Bounds use the spec's single-value binary form — the
-    metadata that lets an engine skip files by predicate, the operation
-    that makes a 100 TB scan read only the files it must."""
-    import pyarrow.parquet as pq
-
-    try:
-        md = pq.ParquetFile(path).metadata
-    except OSError:
-        # Parquet VARIANT logical type — unreadable by this pyarrow;
-        # the spec makes all four stats maps optional, so a variant
-        # file simply ships without file-skipping bounds
-        return None, None, None, None
-    agg: dict[str, dict] = {}
-    for rg in range(md.num_row_groups):
-        row_group = md.row_group(rg)
-        for ci in range(row_group.num_columns):
-            col = row_group.column(ci)
-            name = col.path_in_schema
-            if "." in name or name not in col_ids:
-                continue  # nested or non-schema column
-            st = col.statistics
-            ent = agg.setdefault(
-                name, {"nulls": 0, "min": None, "max": None, "ok": st is not None}
-            )
-            if st is None or not st.has_min_max or st.null_count is None:
-                ent["ok"] = False
-                continue
-            ent["nulls"] += st.null_count
-            ent["min"] = st.min if ent["min"] is None else min(ent["min"], st.min)
-            ent["max"] = st.max if ent["max"] is None else max(ent["max"], st.max)
+    """Per-column stats formatted from the parquet FOOTER record
+    (operators/footer.py; no data read): returns the four spec maps
+    (value_counts 109, null_value_counts 110, lower_bounds 125,
+    upper_bounds 128) in the array-of-record Avro shape, or Nones where
+    the footer lacks statistics — the spec makes all four optional, so
+    a VARIANT file ships without them. Bounds use the spec's
+    single-value binary form — the metadata that lets an engine skip
+    files by predicate, the operation that makes a 100 TB scan read
+    only the files it must."""
+    ft = read_footer(path)
     value_counts, null_counts, lower, upper = [], [], [], []
-    for name, ent in agg.items():
+    for name, c in ft.columns.items():
+        if name not in col_ids:
+            continue  # non-schema column
         fid = col_ids[name]
-        value_counts.append({"key": fid, "value": md.num_rows})
-        if not ent["ok"]:
+        value_counts.append({"key": fid, "value": ft.num_rows})
+        if not c.ok:
             continue
-        null_counts.append({"key": fid, "value": ent["nulls"]})
-        lo = _bound_bytes(type_of[name], ent["min"])
-        hi = _bound_bytes(type_of[name], ent["max"])
+        null_counts.append({"key": fid, "value": c.null_count})
+        lo = _bound_bytes(type_of[name], c.min)
+        hi = _bound_bytes(type_of[name], c.max)
         if lo is not None and hi is not None:
             lower.append({"key": fid, "value": lo})
             upper.append({"key": fid, "value": hi})
@@ -657,6 +634,7 @@ def write_metadata_version(meta_dir: str, md: dict) -> str:
     return new_loc
 
 
+@footer_scope()
 def export_iceberg_metadata(
     table: SnapshotTable,
     branch: str = "main",
@@ -1187,17 +1165,12 @@ def export_iceberg_metadata(
                 if changed is not None:
                     upsert = (changed, del_keys)
 
-        # per-file footer row counts feed only the positional-delete
-        # precheck and the rewrite branch's record_count — skip the
-        # O(files) driver-side footer reads on upsert commits
-        file_rc = {}
-        total_rc = 0
-        if upsert is None:
-            for f in files:
-                rel = urllib.parse.unquote(f["path"])
-                full = os.path.join(table.root, rel)
-                file_rc[full] = (f, _parquet_row_count(full))
-            total_rc = sum(rc for _, rc in file_rc.values())
+        # footer row totals feed only the incremental prechecks and the
+        # rewrite branch's record_count — skip the O(files) driver-side
+        # footer reads on upsert commits
+        total_rc = (
+            0 if upsert is not None else _snapshot_rows(table.root, files)
+        )
 
         if is_minor and base_dir is not None and base_live_rows is not None:
             if total_rc != base_live_rows:
@@ -1778,26 +1751,12 @@ def export_iceberg_metadata(
             # --- full-rewrite snapshot (layout changes, modified rows,
             # compaction; v1 deletes) ---
             if is_compaction and i > 0:
-                # a compaction must preserve the live row count of the
-                # previous snapshot — a wrong flag would silently turn a
-                # data change into a "replace" no external consumer
-                # re-reads
-                prev_dir = by_version[events[i - 1]["version"]]["path"]
-                if os.path.isdir(prev_dir):
-                    want = sum(
-                        _parquet_row_count(
-                            os.path.join(
-                                table.root, urllib.parse.unquote(f["path"])
-                            )
-                        )
-                        for f in _snapshot_files(table.root, prev_dir)
-                    )
-                    if total_rc != want:
-                        raise ValueError(
-                            f"snapshot v{ev['version']} is flagged "
-                            f"operation=compaction but changes the row "
-                            f"count ({want} -> {total_rc})"
-                        )
+                _check_compaction_rows(
+                    table.root,
+                    ev["version"],
+                    by_version[events[i - 1]["version"]]["path"],
+                    total_rc,
+                )
             manifest_path = os.path.join(meta_dir, f"m-{i:05d}.avro")
             manifest_first_row_id = next_row_id
             # PARTITION-SPEC EVOLUTION: this snapshot's own directory
@@ -1815,7 +1774,11 @@ def export_iceberg_metadata(
             sid_spec = _resolve_spec(pcols_i)
             spec_fields_i = specs[sid_spec]
             entries = []
-            for full, (f, rc) in file_rc.items():
+            for f in files:
+                full = os.path.join(
+                    table.root, urllib.parse.unquote(f["path"])
+                )
+                rc = read_footer(full).num_rows
                 vcounts, ncounts, lower, upper = _file_column_stats(
                     full, col_ids, type_of
                 )
@@ -2842,21 +2805,11 @@ def read_iceberg_table(
                 alias_of.setdefault(e["field-id"], []).append(_nm)
         paths = sorted({os.path.abspath(p) for p in files})
 
-        def _footer_cols(p):
-            import pyarrow.parquet as pq
-
-            out = []
-            for f in pq.read_schema(p):
-                md = f.metadata or {}
-                fid = md.get(b"PARQUET:field_id")
-                out.append((f.name, int(fid) if fid is not None else None))
-            return (p, tuple(out))
-
         footers = dict(
             spark.sparkContext.parallelize(
                 paths, max(1, min(len(paths), 256))
             )
-            .map(_footer_cols)
+            .map(lambda p: (p, read_footer(p).fields))
             .collect()
         )
         for p, cols in footers.items():
@@ -3132,26 +3085,13 @@ def read_iceberg_table(
                 # same way as data files: by id, else name mapping.
                 # Delete sets are small by design (the MoR design
                 # point), so footers probe driver-side.
-                import pyarrow.parquet as _pq
-
                 name_types = {
                     f["name"]: _spark_type(f["type"])
                     for f in schema_fields
                 }
                 egroups: dict[tuple, list[str]] = {}
                 for ap in sorted(dpaths):
-                    cols = [
-                        (
-                            fld.name,
-                            int(m[b"PARQUET:field_id"])
-                            if (m := fld.metadata or {}).get(
-                                b"PARQUET:field_id"
-                            )
-                            is not None
-                            else None,
-                        )
-                        for fld in _pq.read_schema(ap)
-                    ]
+                    cols = read_footer(ap).fields
                     if any(fid is not None for _, fid in cols):
                         by_id = {
                             fid: nm for nm, fid in cols if fid is not None
@@ -3358,13 +3298,12 @@ def migrate_parquet_dir(
     paths = paths_all
 
     def _footer_stats(p):
-        import pyarrow.parquet as pq
-
-        return (
-            p,
-            _file_column_stats(p, data_col_ids, data_types),
-            pq.ParquetFile(p).metadata.num_rows,
-        )
+        with footer_scope():  # one footer open for both facts
+            return (
+                p,
+                _file_column_stats(p, data_col_ids, data_types),
+                read_footer(p).num_rows,
+            )
 
     rc_of: dict[str, int] = {}
     stats_of: dict[str, tuple] = {}

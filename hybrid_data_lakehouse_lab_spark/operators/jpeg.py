@@ -805,12 +805,6 @@ def _read_symbol(reader: _BitReader, lut: list[int]) -> int:
     return entry >> 5
 
 
-def _extend(bits: int, s: int) -> int:
-    if s == 0:
-        return 0
-    return bits if bits >= (1 << (s - 1)) else bits - (1 << s) + 1
-
-
 def decode_jpeg(payload: bytes):
     """Decode a JFIF JPEG → (h, w, 3) RGB or (h, w) grayscale uint8
     array: baseline sequential (SOF0, interleaved or per-component

@@ -9,7 +9,16 @@ distributed diff both share.
 
 from __future__ import annotations
 
+from .footer import read_footer
+
 _SCHEME_RE = "^[a-zA-Z0-9+.-]+:/+"
+
+#: Cap on the candidate positions in PARTIALLY changed hash groups that
+#: the collision verification broadcasts (as their distinct (h1, h2)
+#: pairs, at most 16 bytes each). Above it both hash diffs return None
+#: and the exporter takes the always-correct rewrite path instead of
+#: building a broadcast that could exhaust the driver.
+MAX_VERIFY_CANDIDATES = 1_000_000
 
 
 def _fresh_names(taken, *bases) -> list[str]:
@@ -164,7 +173,6 @@ def _position_delete_diff(
     deleted_so_far,
     child_dir: str,
     check_excess: bool = True,
-    verify: bool = True,
 ):
     """If `child_dir`'s rows are a sub-multiset of the MASKED base
     (the union of `base_dirs`' files — one dir or a [base, *append
@@ -262,8 +270,6 @@ def _position_delete_diff(
     cand = _hashed_delete_candidates(
         base, child, cols, _f, _p, _r, _nc, _h1, _h2
     ).localCheckpoint()
-    if not verify:  # measurement-only escape hatch (tools/ab_mor_diff)
-        return cand.select(F.col(_f).alias("file_path"), F.col(_p).alias("pos"))
     # Collision verification — PARTIAL groups only. A candidate group
     # whose joined child multiplicity is NULL vanished from the child
     # entirely; deleting ALL its occurrences is exact even under a hash
@@ -280,6 +286,8 @@ def _position_delete_diff(
     # A/B, tools/ab_mor_diff.py).
     cand_partial = cand.where(F.col(_nc).isNotNull())
     n_partial = cand_partial.count()
+    if n_partial > MAX_VERIFY_CANDIDATES:
+        return None  # verification set too big to broadcast: rewrite
     if n_partial:
         aff = cand_partial.select(_h1, _h2).distinct()
         base_aff = (
@@ -319,7 +327,6 @@ def _append_diff(
     child_dir: str,
     base_rows: int | None = None,
     child_rows: int | None = None,
-    verify: bool = True,
 ):
     """If `child_dir`'s rows are a super-multiset of the MASKED base
     (the union of `base_dirs`' files minus the already-deleted
@@ -401,70 +408,52 @@ def _append_diff(
     n_child = child.count() if child_rows is None else child_rows
     if n != n_child - n_base:
         return None  # some base row missing from child: not an append
-    if verify:
-        # Collision verification — PARTIAL groups only (mirror of the
-        # delete diff): a candidate group whose joined BASE multiplicity
-        # is NULL is entirely new — appending all its child occurrences
-        # is exact even under a collision, because the base provably
-        # holds none of the group's values. Only groups the base
-        # partially covers depend on the ranking choosing value-correct
-        # occurrences; on unique-row tables this set is empty.
-        cand_partial = cand.where(F.col(_nc).isNotNull())
-        n_partial = cand_partial.count()
-        if n_partial:
-            aff = cand_partial.select(_h1, _h2).distinct()
-            child_aff = (
-                child_fp.withColumn(_h1, h1)
-                .withColumn(_h2, h2)
-                .join(F.broadcast(aff), [_h1, _h2], "left_semi")
-                .withColumn(_k, key)
-                .select(_k, _f, _p)
+    # Collision verification — PARTIAL groups only (mirror of the
+    # delete diff): a candidate group whose joined BASE multiplicity
+    # is NULL is entirely new — appending all its child occurrences
+    # is exact even under a collision, because the base provably
+    # holds none of the group's values. Only groups the base
+    # partially covers depend on the ranking choosing value-correct
+    # occurrences; on unique-row tables this set is empty.
+    cand_partial = cand.where(F.col(_nc).isNotNull())
+    n_partial = cand_partial.count()
+    if n_partial > MAX_VERIFY_CANDIDATES:
+        return None  # verification set too big to broadcast: rewrite
+    if n_partial:
+        aff = cand_partial.select(_h1, _h2).distinct()
+        child_aff = (
+            child_fp.withColumn(_h1, h1)
+            .withColumn(_h2, h2)
+            .join(F.broadcast(aff), [_h1, _h2], "left_semi")
+            .withColumn(_k, key)
+            .select(_k, _f, _p)
+        )
+        base_aff_counts = (
+            base.withColumn(_h1, h1)
+            .withColumn(_h2, h2)
+            .join(F.broadcast(aff), [_h1, _h2], "left_semi")
+            .withColumn(_k, key)
+            .groupBy(_k)
+            .agg(F.count(F.lit(1)).alias(_nc))
+        )
+        exact = (
+            _rank_minus_counts(
+                child_aff, base_aff_counts, [_k], _f, _p, _nc, _r
             )
-            base_aff_counts = (
-                base.withColumn(_h1, h1)
-                .withColumn(_h2, h2)
-                .join(F.broadcast(aff), [_h1, _h2], "left_semi")
-                .withColumn(_k, key)
-                .groupBy(_k)
-                .agg(F.count(F.lit(1)).alias(_nc))
-            )
-            exact = (
-                _rank_minus_counts(
-                    child_aff, base_aff_counts, [_k], _f, _p, _nc, _r
-                )
-                .select(_f, _p)
-                .localCheckpoint()
-            )
-            if (
-                exact.count() != n_partial
-                or exact.join(cand_partial, [_f, _p], "inner").count()
-                != n_partial
-            ):
-                return None  # 128-bit collision in a partial group: rewrite
+            .select(_f, _p)
+            .localCheckpoint()
+        )
+        if (
+            exact.count() != n_partial
+            or exact.join(cand_partial, [_f, _p], "inner").count()
+            != n_partial
+        ):
+            return None  # 128-bit collision in a partial group: rewrite
     return child_fp.join(
         F.broadcast(cand.select(_f, _p)) if n <= 1_000_000 else cand.select(_f, _p),
         [_f, _p],
         "left_semi",
     ).select(*child.columns)
-
-
-def _parquet_row_count(path: str) -> int:
-    import pyarrow.parquet as pq
-
-    try:
-        return pq.ParquetFile(path).metadata.num_rows
-    except OSError:
-        # files holding a Parquet VARIANT logical type are rejected by
-        # this container's pyarrow ("Thrift LogicalType that is not
-        # recognized"); DuckDB's reader handles them — footer-only
-        # count, no data scan
-        import duckdb
-
-        # parameterized read_parquet: a quote or glob metachar in the
-        # path must not break the query or trigger DuckDB globbing
-        return duckdb.execute(
-            "SELECT count(*) FROM read_parquet(?)", [path]
-        ).fetchone()[0]
 
 
 def finalize_spark_parts(
@@ -495,7 +484,7 @@ def finalize_spark_parts(
     j = 0
     for dirpath, fn in part_files:
         full = os.path.join(dirpath, fn)
-        num_rows = _parquet_row_count(full)  # pyarrow, VARIANT fallback
+        num_rows = read_footer(full).num_rows
         if drop_empty and num_rows == 0:
             os.remove(full)
             continue

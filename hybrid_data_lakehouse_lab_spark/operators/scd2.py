@@ -261,30 +261,3 @@ def current_state(
         .drop("_rn")
         .withColumn(deleted_col, F.col(op_col) == "d")
     )
-
-
-def close_out_deletes(
-    scd2: DataFrame,
-    delete_keys: DataFrame,
-    key_cols: list[str],
-    delete_ts_col: Column,
-) -> DataFrame:
-    """MERGE #1 analog (reference: libs/scd2_spark_processor.py:438-450):
-    close current rows for deleted keys in place. Pure-DataFrame rewrite:
-    left join on keys + conditional rewrite of the matched rows.
-    """
-    marked = scd2.join(
-        F.broadcast(delete_keys.select(*key_cols, delete_ts_col.alias("_del_ts"))),
-        on=key_cols,
-        how="left",
-    )
-    hit = F.col("_del_ts").isNotNull() & F.col("is_current")
-    return (
-        marked.withColumn(
-            "effective_end_ts",
-            F.when(hit, F.col("_del_ts")).otherwise(F.col("effective_end_ts")),
-        )
-        .withColumn("is_deleted", F.when(hit, F.lit(True)).otherwise(F.col("is_deleted")))
-        .withColumn("is_current", F.when(hit, F.lit(False)).otherwise(F.col("is_current")))
-        .drop("_del_ts")
-    )

@@ -10,7 +10,7 @@ exactly the ones whose partials merge losslessly.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # fn name → (phase-1 partial, phase-2 combiner)
@@ -49,10 +49,3 @@ def salted_aggregate(
     return phase1.groupBy(*keys).agg(
         *[_ALGEBRAIC[fn][1](a).alias(a) for _, fn, a in aggs]
     )
-
-
-def salted_key(col: Column | str, n_salt: int = 16) -> Column:
-    """Join-side salt helper: `(key, salt)` composite for a skewed probe
-    side; the build side is exploded ×n_salt to match. Kept as a column
-    expression so callers compose it into any join."""
-    return F.pmod(F.hash(F.col(col) if isinstance(col, str) else col), F.lit(n_salt))

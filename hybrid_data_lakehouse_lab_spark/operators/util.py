@@ -7,6 +7,8 @@ import urllib.parse
 
 from pyspark.sql import DataFrame
 
+from .footer import read_footer
+
 #: Size gate for ``fan_out(min_bytes=...)`` call sites: the measured
 #: crossover (local[32], interleaved A/B) where a round-robin shuffle of
 #: the scan output starts paying for itself on JVM-expression lanes
@@ -43,13 +45,10 @@ def _input_bytes(files: list[str]) -> int | None:
             path = f
         try:
             if path.endswith(".parquet"):
-                import pyarrow.parquet as pq
-
-                md = pq.ParquetFile(path).metadata
-                total += sum(
-                    md.row_group(i).total_byte_size
-                    for i in range(md.num_row_groups)
-                )
+                size = read_footer(path).uncompressed_bytes
+                if size is None:
+                    return None  # VARIANT footer: no row-group sizes
+                total += size
             else:
                 total += os.path.getsize(path)
         except Exception:

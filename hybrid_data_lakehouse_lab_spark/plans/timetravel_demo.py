@@ -2882,9 +2882,9 @@ def iceberg_variant_roundtrip(
     Scale: variant decode is JVM-columnar (no Python), the DV build is
     the shared executor-side Arrow kernel, and the masked read is one
     scan + a broadcast anti-join — the same 100 TB envelope as the
-    non-variant v3 lanes. pyarrow in this container cannot open VARIANT
-    footers, so footer row counts fall back to DuckDB's reader
-    (operators/mor_diff.py:_parquet_row_count)."""
+    non-variant v3 lanes. This pyarrow cannot open VARIANT footers, so
+    footer row counts fall back to DuckDB's reader
+    (operators/footer.py:read_footer)."""
     import json as _json
 
     ev = load_table(spark, sf_dir, "events").select(

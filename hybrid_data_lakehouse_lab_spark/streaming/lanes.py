@@ -232,12 +232,6 @@ def scd2_stream(
     return writer.start()
 
 
-# Column helper used by lanes' callers to build a current-state view with
-# the reference's soft-delete filter (scripts/cdc_to_pinot_current.py:216).
-def active_rows(current: DataFrame) -> DataFrame:
-    return current.filter(~F.col("is_deleted"))
-
-
 def windowed_counts_stream(
     events: DataFrame,
     out_dir: str,

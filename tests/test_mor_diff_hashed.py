@@ -177,3 +177,35 @@ def test_prior_deletes_masked_before_hashing(spark, tmp_path):
     d = _position_delete_diff(spark, b, prior, c, check_excess=False)
     positions = {(r.file_path, r.pos) for r in d.collect()}
     assert positions == {(os.path.join(b, f), 1)}
+
+
+def test_verification_broadcast_is_capped(spark, tmp_path, monkeypatch):
+    """Both hash diffs broadcast the hash groups that a change touches
+    only partially, to re-check them by full value. Above
+    MAX_VERIFY_CANDIDATES candidate positions in such groups they
+    return None (the exporter's rewrite path) instead of broadcasting;
+    at the cap they verify and return the exact diff."""
+    from hybrid_data_lakehouse_lab_spark.operators import mor_diff
+
+    schema = "k INT, s STRING"
+    ten = str(tmp_path / "ten")  # every value 10 times
+    five = str(tmp_path / "five")  # every value 5 times
+    spark.createDataFrame(
+        [(i % 10, f"s{i % 10}") for i in range(100)], schema
+    ).repartition(2).write.parquet(ten)
+    spark.createDataFrame(
+        [(v, f"s{v}") for v in range(10) for _ in range(5)], schema
+    ).write.parquet(five)
+    # deleting 5 of 10 occurrences per value: 50 partial candidates;
+    # appending 5 more per value: 50 partial candidates
+    monkeypatch.setattr(mor_diff, "MAX_VERIFY_CANDIDATES", 49)
+    assert _position_delete_diff(spark, ten, None, five, check_excess=False) is None
+    assert _append_diff(spark, five, None, ten) is None
+    monkeypatch.setattr(mor_diff, "MAX_VERIFY_CANDIDATES", 50)
+    d = _position_delete_diff(spark, ten, None, five, check_excess=False)
+    assert d is not None and d.count() == 50
+    a = _append_diff(spark, five, None, ten)
+    assert a is not None
+    assert sorted(map(tuple, a.collect())) == sorted(
+        (v, f"s{v}") for v in range(10) for _ in range(5)
+    )

@@ -162,9 +162,7 @@ def test_parquet_row_count_fallback_survives_odd_paths(spark, tmp_path):
     """The DuckDB footer fallback (triggered by the Parquet VARIANT
     logical type) must use a parameterized read_parquet — a quote or a
     glob bracket in the path is a literal, not SQL or a glob."""
-    from hybrid_data_lakehouse_lab_spark.operators.mor_diff import (
-        _parquet_row_count,
-    )
+    from hybrid_data_lakehouse_lab_spark.operators.footer import read_footer
 
     odd = tmp_path / "o'brien [1]"
     _variant_df(spark, 7).coalesce(1).write.parquet(str(odd / "t"))
@@ -174,7 +172,7 @@ def test_parquet_row_count_fallback_survives_odd_paths(spark, tmp_path):
         if p.name.endswith(".parquet") and not p.name.startswith("_")
     ]
     assert parts
-    assert _parquet_row_count(str(parts[0])) == 7
+    assert read_footer(str(parts[0])).num_rows == 7
 
 
 def test_oauth_trailing_slash_still_form_parsed(tmp_path):

@@ -58,18 +58,9 @@ def main() -> None:
     def old_append_shim(*a, base_rows=None, child_rows=None):
         return old._append_diff(*a)
 
-    import functools
-
     new_fns = {
         "_position_delete_diff": mor_diff._position_delete_diff,
         "_append_diff": mor_diff._append_diff,
-        "_upsert_diff": mor_diff._upsert_diff,
-    }
-    noverify_fns = {
-        "_position_delete_diff": functools.partial(
-            mor_diff._position_delete_diff, verify=False
-        ),
-        "_append_diff": functools.partial(mor_diff._append_diff, verify=False),
         "_upsert_diff": mor_diff._upsert_diff,
     }
     old_fns = {
@@ -110,7 +101,7 @@ def main() -> None:
     apply(new_fns)
     materialize(QUERIES[lanes[0]](spark, slice_dir))
 
-    variants = [("old", old_fns), ("new", new_fns), ("noverify", noverify_fns)]
+    variants = [("old", old_fns), ("new", new_fns)]
     results: dict[str, dict[str, float]] = {label: {} for label, _ in variants}
     for r in range(n_rounds):
         for label, fns in variants:
